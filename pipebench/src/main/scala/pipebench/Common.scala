@@ -73,13 +73,6 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       // keep every progress event of a run, not only the last 100
       .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      // the record topic's stand-in is a file source: pack a trigger's
-      // small files into about one task per core, as a Kafka source makes
-      // one task per topic partition, instead of one task per file
-      .config("spark.sql.files.openCostInBytes", "0")
-      // and list a trigger's files on the driver, as no Kafka fetch would
-      // start a Spark job to find its offsets
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

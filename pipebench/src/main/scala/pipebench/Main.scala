@@ -12,8 +12,8 @@ object Main {
   val EndToEnd: Seq[String] = Seq("setup_s", "records_per_s")
   /** Also measured, and printed in the report only: on this machine their
     * run-to-run spread reaches or passes the 0.25 bound (see README.md). The
-    * batch workload, which the driver does not run, prints its two query
-    * totals in its result too. */
+    * batch workload, which is not in `BENCHMARK.json`, prints its two
+    * query totals in its result too. */
   val Reported: Seq[String] = EndToEnd ++ Seq("record_latency_p50_ms",
     "record_latency_p99_ms", "batch_close_p50_ms", "batch_close_p90_ms", "query_total_s",
     "query_cold_s")

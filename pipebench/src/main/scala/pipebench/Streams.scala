@@ -157,6 +157,13 @@ object Streams {
       : (Instance, Double, Seq[Double], Seq[Double]) = {
     val ts = System.nanoTime()
     val spark = Sessions.start()
+    // the record topic's stand-in is a file source: pack a trigger's small
+    // files into about one task per core, as a Kafka source makes one task
+    // per topic partition, instead of one task per file, and list a
+    // trigger's files on the driver, as no Kafka fetch starts a Spark job
+    // to find its offsets
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
     listener.foreach(spark.sparkContext.addSparkListener)
     val sessionS = (System.nanoTime() - ts) / 1e9
     val setups = mutable.ArrayBuffer.empty[Double]
