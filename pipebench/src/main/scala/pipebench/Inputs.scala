@@ -54,32 +54,26 @@ final class Generator(seed: Long, val topic: String, val partitions: Int) {
   def outputTopic: String = outTopic
   def invalidOutputTopic: String = invalidTopic
 
-  private val alnum = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 "
+  /** Payloads are the reference pipeline's own test fixtures (FIXTURES.md
+    * section 1): a valid record is the FHIR-style claim (about 0.3 KB, with
+    * the record's sequence number as its id) or the short UTF-8 person
+    * record, in equal shares; a malformed record is one of the fixtures'
+    * five non-JSON strings. */
+  private val claim = ("{\"resourceType\":\"Claim\",\"id\":\"%d\",\"text\":{\"div\":\"<div " +
+    "xmlns=\\\"http://www.w3.org/1999/xhtml\\\">A human-readable rendering of the " +
+    "MOnkee-Porcupine Health Claim</div>\"},\"insurance\":[{\"identifier\":{\"system\":" +
+    "\"http://PorcupineSys.com/claim\",\"value\":\"19006\"},\"coverage\":{\"reference\":" +
+    "\"CoverageBlarg/9876B1\"}}]}")
+  private val person = "{\"name\":\"Porcpine\",\"age\":26,\"status\":\"snorkel-\u4e2d\u6587\"}"
+  private val notJson = Array("Not-validJSON", "Luna-is-Not-Valid-JSON", "Porcuspino-Invalid",
+    "Monkey-Invalid", "Tiger-Invalid-JSON")
 
-  /** Payload size mix: 70 % small (~0.1-0.3 KB), 25 % medium (~0.6-1.5 KB),
-    * 5 % large (~3-6 KB). */
-  private def textLength(): Int = {
-    val u = rnd.nextDouble()
-    if (u < 0.70) 80 + rnd.nextInt(220)
-    else if (u < 0.95) 600 + rnd.nextInt(900)
-    else 3000 + rnd.nextInt(3000)
-  }
-
-  private def payload(seq: Long, batchId: String, malformed: Boolean): Array[Byte] = {
-    val n = textLength()
-    val sb = new StringBuilder(n + 96)
-    sb.append("{\"resourceType\":\"Claim\",\"id\":\"r").append(seq)
-      .append("\",\"batch\":\"").append(batchId).append("\",\"amount\":")
-      .append(rnd.nextInt(100000)).append(",\"text\":\"")
-    var i = 0
-    while (i < n) { sb.append(alnum.charAt(rnd.nextInt(alnum.length))); i += 1 }
-    sb.append("\"}")
-    val s = sb.toString
-    val cut =
-      if (!malformed) s
-      else if (rnd.nextBoolean()) s.substring(0, 12 + rnd.nextInt(s.length - 14))
-      else "Not-JSON-" + s
-    cut.getBytes(UTF_8)
+  private def payload(seq: Long, malformed: Boolean): Array[Byte] = {
+    val s =
+      if (malformed) notJson(rnd.nextInt(notJson.length))
+      else if (rnd.nextBoolean()) claim.format(seq)
+      else person
+    s.getBytes(UTF_8)
   }
 
   /** The reference validator's verdict: (valid, failure text). */
@@ -110,7 +104,7 @@ final class Generator(seed: Long, val topic: String, val partitions: Int) {
     nextSeq += 1
     val partition = (seq % partitions).toInt
     val key = s"r$seq".getBytes(UTF_8)
-    val value = payload(seq, if (batchId == null) "none" else batchId, malformed)
+    val value = payload(seq, malformed)
     payloadBytes += value.length
     val source = "source" -> "pipebench".getBytes(UTF_8)
     val headers =

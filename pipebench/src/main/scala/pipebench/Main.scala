@@ -1,23 +1,25 @@
 package pipebench
 
-import org.apache.spark.sql.streaming.StreamingQueryProgress
-
 /** Entry point: `--workload <replay|live|batch-pipeline> --seed <n>
   * --seconds <n> --trace <0|1> --work <dir>`. Prints report lines starting
   * with `#`, then the result as one JSON line. An untraced run reports the
   * end-to-end metrics, a traced run the per-layer metrics. */
 object Main {
 
-  /** The end-to-end metrics of `BENCHMARK.json`, printed by every run. */
-  val EndToEnd: Seq[String] = Seq("setup_s", "records_per_s")
-  /** Also measured, and printed in the report only: on this machine their
-    * run-to-run spread reaches or passes the 0.25 bound (see README.md). The
-    * batch workload, which is not in `BENCHMARK.json`, prints its two
-    * query totals in its result too. */
-  val Reported: Seq[String] = EndToEnd ++ Seq("record_latency_p50_ms",
+  /** The end-to-end metrics in the result of each workload: those of
+    * `BENCHMARK.json` for its two workloads, and the query totals of
+    * `batch-pipeline`, which is not one of them. `records_per_s` and, on
+    * `live`, the record latency and batch close percentiles are measured
+    * and printed in the report only: on this machine their run-to-run
+    * spread reaches or passes the largest bound a `BENCHMARK.json` metric
+    * may have (see README.md). */
+  val EndToEnd: Map[String, Seq[String]] = Map(
+    "replay" -> Seq("setup_s"),
+    "live" -> Seq("setup_s"),
+    "batch-pipeline" -> Seq("setup_s", "query_total_s", "query_cold_s"))
+  val Reported: Seq[String] = Seq("setup_s", "records_per_s", "record_latency_p50_ms",
     "record_latency_p99_ms", "batch_close_p50_ms", "batch_close_p90_ms", "query_total_s",
     "query_cold_s")
-  val BatchEndToEnd: Seq[String] = EndToEnd ++ Seq("query_total_s", "query_cold_s")
 
   /** Every per-layer metric and its unit; a workload that does not exercise
     * a layer reports it as 0. */
@@ -69,8 +71,7 @@ object Main {
         if (args.trace) {
           PerLayer.foreach { case (n, u) => out.put(n, metrics.get(n).map(_._1).getOrElse(0.0), u) }
           if (!Trace.spans.isEmpty) Trace.writeTo(args.work.resolve("spans.jsonl"))
-        } else (if (args.workload == "batch-pipeline") BatchEndToEnd else EndToEnd)
-          .foreach(n => out.put(n, metrics(n)._1, metrics(n)._2))
+        } else EndToEnd(args.workload).foreach(n => out.put(n, metrics(n)._1, metrics(n)._2))
         println(out.json)
         0
       } catch {
@@ -97,7 +98,7 @@ object Main {
   private def runStream(args: Args, res: Result, listener: Option[JobCounts]): Unit = {
     val stub = new MgmtStub
     try {
-      val (inst, sessionS, setups, colds) = Streams.setup(args, stub, listener)
+      val (inst, setups) = Streams.setup(args, stub, listener)
       val b = inst.broker
       val before = (b.opened, b.committed, b.aborted, b.markerScanNs.get, stub.tokenCalls.get,
         b.tally(inst.gen.outputTopic), b.tally(inst.gen.invalidOutputTopic))
@@ -115,26 +116,27 @@ object Main {
 
       val windowed = inst.running.all.map(q => Streams.progress(q, m.windowStartMs))
       val Seq(rp, np, tp) = windowed
-      def med(ps: Seq[StreamingQueryProgress]) =
-        if (ps.isEmpty) 0.0 else Stats.median(ps.map(Streams.triggerMs(_, "triggerExecution")))
       res.put("setup_s", Stats.median(setups), "s")
-      res.put("query_cold_s", colds.sum, "s")
-      res.put("query_total_s", windowed.map(med).sum / 1e3, "s")
       res.put("records_per_s", Stats.median(m.rates.toSeq), "records/s")
-      res.put("record_latency_p50_ms", Stats.percentile(m.latencyMs.toSeq, 50), "ms")
-      res.put("record_latency_p99_ms", Stats.percentile(m.latencyMs.toSeq, 99), "ms")
-      res.put("batch_close_p50_ms", Stats.percentile(m.closeMs.toSeq, 50), "ms")
-      res.put("batch_close_p90_ms", Stats.percentile(m.closeMs.toSeq, 90), "ms")
+      live.foreach { _ =>
+        res.put("record_latency_p50_ms", Stats.percentile(m.latencyMs.toSeq, 50), "ms")
+        res.put("record_latency_p99_ms", Stats.percentile(m.latencyMs.toSeq, 99), "ms")
+        res.put("batch_close_p50_ms", Stats.percentile(m.closeMs.toSeq, 50), "ms")
+        if (m.closeMs.size >= 100)
+          res.put("batch_close_p90_ms", Stats.percentile(m.closeMs.toSeq, 90), "ms")
+      }
 
       val g = inst.gen
       Report.line(f"${args.workload}: ${m.records} records, ${m.batchIds.size} batches, " +
         f"${g.byDisposition.mkString("/")} valid/invalid-payload/missing/unknown (all, warm included)")
-      Report.line(f"session start $sessionS%.3f s; DAG set-ups ${setups.map(s => f"$s%.3f").mkString(" ")} s; " +
-        f"first triggers ${colds.map(s => f"$s%.3f").mkString(" ")} s")
-      Report.line(f"record latency n=${m.latencyMs.size}; batch close n=${m.closeMs.size}; " +
+      Report.line(f"set-ups ${setups.map(s => f"$s%.3f").mkString(" ")} s; " +
         f"throughput samples n=${m.rates.size}")
       Report.line(f"triggers in window: records ${rp.size}, notifications ${np.size}, tracker ${tp.size}")
+      Report.line("record triggers in window (rows/ms): " + rp.map(p =>
+        f"${p.numInputRows}/${Streams.triggerMs(p, "triggerExecution")}%.0f").mkString(" "))
       live.foreach { l =>
+        Report.line(f"live: record latency n=${m.latencyMs.size}; batch close n=${m.closeMs.size}" +
+          (if (m.closeMs.size < 100) " (under 100, so no p90)" else ""))
         val late = l.lateNs.map(_ / 1e6)
         Report.line(f"live: rate ${Streams.LiveRate} records/s, generator late p50 " +
           f"${Stats.median(late)}%.2f ms, p99 ${Stats.percentile(late, 99)}%.2f ms, " +
@@ -211,6 +213,11 @@ object Main {
         val (jb, sb, tb, _, _) = jobsBefore.get
         Report.line(s"spark in window: jobs ${l.total.jobs.get - jb}, stages ${l.total.stages.get - sb}, " +
           s"tasks ${l.total.tasks.get - tb}")
+        if (args.workload == "replay") {
+          inst.stop()
+          Sessions.stop(inst.spark)
+          BatchPipeline.traceLayers(args, res, l)
+        }
       }
     } finally stub.stop()
   }

@@ -92,6 +92,13 @@ object Streams {
   val Capacity: Int = 4000000
   val SetupCycles = 2
   val TickNs = 100000000L
+  /** Record shares of the program's own record-plane fixture
+    * (`fixtures.Dress`, FIXTURES.md section 6): a malformed payload when
+    * `event_id % 7 == 0`, no batchId header when `event_id % 100 == 0`, an
+    * unknown batch when `event_id % 100 == 1`. */
+  val MalformedShare: Double = 1.0 / 7
+  val MissingShare = 0.01
+  val UnknownShare = 0.01
 
   def await(what: String, timeoutS: Int = 60, state: => String = "")(cond: => Boolean): Unit = {
     val deadline = System.nanoTime() + timeoutS * 1000000000L
@@ -141,36 +148,26 @@ object Streams {
 
   private def hadInput(q: StreamingQuery): Boolean = q.recentProgress.exists(_.numInputRows > 0)
 
-  /** The first trigger that read input, or the first trigger, of `q`. */
-  private def firstTriggerS(q: StreamingQuery): Double =
-    q.recentProgress.find(_.numInputRows > 0).orElse(q.recentProgress.headOption)
-      .map(triggerMs(_, "triggerExecution")).getOrElse(0.0) / 1e3
-
-  /** Start the DAG [[SetupCycles]] times on one session. A set-up runs from
-    * starting the queries until the record and notification queries have
-    * finished a trigger over the warm input and the tracker has finished a
-    * trigger (it runs on its 1 s clock). The last DAG is kept; its warm batch
-    * closes while the workload runs. Returns it with the session start time,
-    * the set-up times and each set-up's sum of the three queries' first
-    * trigger times. */
-  def setup(args: Args, stub: MgmtStub, listener: Option[JobCounts])
-      : (Instance, Double, Seq[Double], Seq[Double]) = {
-    val ts = System.nanoTime()
-    val spark = Sessions.start()
-    // the record topic's stand-in is a file source: pack a trigger's small
-    // files into about one task per core, as a Kafka source makes one task
-    // per topic partition, instead of one task per file, and list a
-    // trigger's files on the driver, as no Kafka fetch starts a Spark job
-    // to find its offsets
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
-    listener.foreach(spark.sparkContext.addSparkListener)
-    val sessionS = (System.nanoTime() - ts) / 1e9
+  /** Set the DAG up [[SetupCycles]] times, each on a session of its own. A
+    * set-up runs from starting the session until every query has started,
+    * the record and notification queries have finished a trigger over the
+    * warm input and the tracker has finished a trigger (it runs on its 1 s
+    * clock). The last DAG is kept; its warm batch closes while the workload
+    * runs. Returns it with the set-up times. */
+  def setup(args: Args, stub: MgmtStub, listener: Option[JobCounts]): (Instance, Seq[Double]) = {
     val setups = mutable.ArrayBuffer.empty[Double]
-    val colds = mutable.ArrayBuffer.empty[Double]
     var last: Instance = null
     for (i <- 1 to SetupCycles) {
       val t0 = System.nanoTime()
+      val spark = Sessions.start()
+      // the record topic's stand-in is a file source: pack a trigger's small
+      // files into about one task per core, as a Kafka source makes one task
+      // per topic partition, instead of one task per file, and list a
+      // trigger's files on the driver, as no Kafka fetch starts a Spark job
+      // to find its offsets
+      spark.conf.set("spark.sql.files.openCostInBytes", "0")
+      spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
+      listener.foreach(spark.sparkContext.addSparkListener)
       val inst = new Instance(i, args, stub, spark,
         new Generator(args.seed * 1000003L + i, Topic, Partitions))
       warm(inst)
@@ -179,15 +176,15 @@ object Streams {
         inst.broker.committedRecords >= inst.gen.issued && hadInput(r.records) &&
           hadInput(r.notifications) && r.tracker.lastProgress != null)
       setups += (System.nanoTime() - t0) / 1e9
-      colds += r.all.map(firstTriggerS).sum
       Report.progress(f"set-up $i took ${setups.last}%.3f s")
       if (i < SetupCycles) {
         r.all.foreach(q => await(s"${q.name} to go idle")(!q.status.isTriggerActive))
         inst.stop()
+        Sessions.stop(spark)
       } else last = inst
     }
     listener.foreach(_ => Trace.reset())
-    (last, sessionS, setups.toSeq, colds.toSeq)
+    (last, setups.toSeq)
   }
 
   /** Batches a long-running job has already closed: their COMPLETED
@@ -205,10 +202,12 @@ object Streams {
         inst.running.tracker.recentProgress.map(_.numInputRows).sum > HistoryBatches)
   }
 
-  /** What a workload measured, for the metrics and the report. */
+  /** What a workload measured, for the metrics and the report. Record
+    * latencies and batch closes are measured on `live` only. */
   final class Measured {
     val latencyMs = mutable.ArrayBuffer.empty[Double]
     val closeMs = mutable.ArrayBuffer.empty[Double]
+    /** records/s: one per measured round on `replay`, one on `live` */
     val rates = mutable.ArrayBuffer.empty[Double]
     /** wall clock when the workload started, after set-up */
     var windowStartMs = 0L
@@ -224,16 +223,17 @@ object Streams {
     * notifications. Their STARTED notifications are applied before the
     * release, as they would be from before an outage. A round ends when the
     * last record has committed and the last terminal PUT has arrived. */
-  val ReplayRecords = 15000
+  val ReplayRecords = 30000
   val ReplayBatches = 12
+  val ReplayWarmRounds = 1
 
   def replay(args: Args, inst: Instance): Measured = {
     val m = new Measured
     val g = inst.gen
     m.windowStartMs = System.currentTimeMillis()
-    // round 0 runs the backlog path once before the clock, as the first
-    // whole-backlog trigger of a JVM pays its JIT warm-up
-    round(inst, 0, None)
+    // the first whole-backlog triggers of a JVM pay its JIT warm-up: each
+    // of the first rounds drains faster than the one before
+    (1 to ReplayWarmRounds).foreach(w => round(inst, -w, None))
     m.firstSeq = g.issued
     var measured = 0.0
     var r = 0
@@ -251,13 +251,14 @@ object Streams {
     val bs = (0 until ReplayBatches).map(k => inst.newBatch(s"replay-$r-$k", -1))
     val startSeq = g.issued
     val recs = (0 until ReplayRecords).map { k =>
-      if (g.rnd.nextDouble() < 0.01) inst.missingHeaderRecord()
-      else inst.record(bs(k % ReplayBatches), malformed = g.rnd.nextDouble() < 0.05)
+      if (g.rnd.nextDouble() < MissingShare) inst.missingHeaderRecord()
+      else inst.record(bs(k % ReplayBatches), malformed = g.rnd.nextDouble() < MalformedShare)
     }
     val files = inst.stageRecords(recs)
     inst.topic.publish(bs.map(b => g.notification(b.id, Status.Started, -1, -1)))
     await("the replay batches' STARTED notifications")(
       bs.forall(b => inst.running.snapshot.get(b.id).nonEmpty))
+    val triggersBefore = inst.running.records.recentProgress.count(_.numInputRows > 0)
     val t0 = System.nanoTime()
     inst.topic.publish(bs.map(b => g.notification(b.id, Status.SendCompleted, b.total, -1)))
     files.foreach(inst.stage.release)
@@ -266,23 +267,17 @@ object Streams {
         bs.forall(b => inst.stub.terminals.containsKey(b.id)))
     var last = 0L
     var s = startSeq
-    while (s < g.issued) {
-      val c = inst.broker.commitAt(s.toInt)
-      into.foreach(_.latencyMs += (c - t0) / 1e6)
-      if (c > last) last = c
-      s += 1
-    }
-    bs.foreach { b =>
-      val at = inst.stub.terminals.get(b.id).receivedNs
-      into.foreach(_.closeMs += (at - t0) / 1e6)
-      if (at > last) last = at
-    }
+    while (s < g.issued) { last = math.max(last, inst.broker.commitAt(s.toInt)); s += 1 }
+    val committed = (last - t0) / 1e9
+    bs.foreach(b => last = math.max(last, inst.stub.terminals.get(b.id).receivedNs))
     val drain = (last - t0) / 1e9
     into.foreach { m =>
       m.rates += (g.issued - startSeq) / drain
       m.batchIds ++= bs.map(_.id)
     }
-    Report.line(f"replay round $r: ${g.issued - startSeq} records in $drain%.3f s" +
+    val triggers = inst.running.records.recentProgress.count(_.numInputRows > 0) - triggersBefore
+    Report.line(f"replay round $r: ${g.issued - startSeq} records in $drain%.3f s " +
+      f"(last commit at $committed%.3f s, $triggers record triggers)" +
       (if (into.isEmpty) " (warm-up, not measured)" else ""))
     drain
   }
@@ -298,9 +293,9 @@ object Streams {
     * the start-up transient of an open loop. Shares per batch: 10 %
     * get their STARTED notification 300 ms after their first records (the
     * V3 lookup resolves them), 5 % end with 5 malformed records against an
-    * invalid threshold of 3 (FAILED), the rest have 5 % malformed records.
-    * Per record: 1 % carry no batchId header, 1 % an id the API answers 404
-    * for. A batch's SEND_COMPLETED is due one tick after its last record. */
+    * invalid threshold of 3 (FAILED), in the rest [[MalformedShare]] of the
+    * records are malformed. Per record: [[MissingShare]] carry no batchId
+    * header, [[UnknownShare]] an id the API answers 404 for. A batch's SEND_COMPLETED is due one tick after its last record. */
   val LiveRate = 1000
   val LiveActive = 30
   val PreRollTicks = 20
@@ -365,14 +360,14 @@ object Streams {
       while (slot < perTick) {
         val u = g.rnd.nextDouble()
         val rec =
-          if (u < 0.01) inst.missingHeaderRecord()
-          else if (u < 0.02) inst.ghostRecord(ghostPool(g.rnd.nextInt(ghostPool.size)))
+          if (u < MissingShare) inst.missingHeaderRecord()
+          else if (u < MissingShare + UnknownShare) inst.ghostRecord(ghostPool(g.rnd.nextInt(ghostPool.size)))
           else {
             val i = g.rnd.nextInt(active.size)
             val lb = active(i)
             val malformed =
               if (lb.tailInvalid > 0) lb.emitted >= lb.n - lb.tailInvalid
-              else g.rnd.nextDouble() < 0.05
+              else g.rnd.nextDouble() < MalformedShare
             val r = inst.record(lb.exp, malformed)
             lb.emitted += 1
             if (lb.emitted == lb.n) {
@@ -436,6 +431,9 @@ object Streams {
       }
       s += 1
     }
+    // not a throughput while the program keeps up: the measured records
+    // over the window stretched by the last record's latency, which is
+    // bound by the last record trigger
     m.rates += measuredRecords / ((lastCommit - (t0 + measuredFrom * TickNs)) / 1e9)
     liveIds.foreach { id =>
       val b = inst.batches(id)
